@@ -324,7 +324,7 @@ def q_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = term_graph(_docs(spark, sf_dir)).select(
         "subj", F.col("pred"), "obj"
     )
-    return two_hop(g, "data", limit=10**9).select("mid", "neighbor")
+    return two_hop(g, "data", limit=None).select("mid", "neighbor")
 
 
 # ---------------------------------------------------------------------------

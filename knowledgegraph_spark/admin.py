@@ -13,7 +13,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from knowledgegraph_spark.config import node_schema, triple_schema
+from knowledgegraph_spark.config import MAX_BUCKETS, node_schema, triple_schema
 from knowledgegraph_spark.sources.catalog import Catalog
 
 CORE_TABLES = (
@@ -88,7 +88,7 @@ def ledger_buckets_for(
     """Ledger bucket count sized to the url population, like
     similarity.n_planes_for (round-4 verdict item 8): buckets ≈
     (n_urls · headroom) / target_rows_per_bucket, rounded up to a power
-    of two and clamped to [16, 4096].
+    of two and clamped to [16, config.MAX_BUCKETS].
 
     ``headroom`` anticipates growth: the count is chosen at FIRST write
     from the first batch's size, and the layout is then persisted —
@@ -101,7 +101,7 @@ def ledger_buckets_for(
     import math
 
     want = max(1.0, n_urls * headroom / target_rows_per_bucket)
-    return int(min(4096, max(16, 2 ** math.ceil(math.log2(want)))))
+    return int(min(MAX_BUCKETS, max(16, 2 ** math.ceil(math.log2(want)))))
 
 
 def compact_ledger(cat: Catalog, n_buckets: int | None = None) -> dict:
@@ -122,6 +122,8 @@ def compact_ledger(cat: Catalog, n_buckets: int | None = None) -> dict:
     with no layout yet derives one from its row count
     (``ledger_buckets_for``).  Returns before/after row and file counts.
     """
+    if n_buckets is not None and not 1 <= n_buckets <= MAX_BUCKETS:
+        raise ValueError(f"n_buckets={n_buckets} is outside [1, MAX_BUCKETS={MAX_BUCKETS}]")
     if not cat.exists("checkpoint_ledger"):
         return {"rows_before": 0, "rows_after": 0, "files_before": 0, "files_after": 0}
 

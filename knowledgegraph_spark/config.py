@@ -164,15 +164,23 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
+# Most ``bucket=`` partition directories a catalog table may hold: the
+# ledger layout is clamped to it (admin.ledger_buckets_for) and node/triple
+# layouts are checked against it (plans.pipeline.run_pipeline).  get_spark
+# lists up to this many directories serially on the driver, so a catalog
+# read never starts a Spark listing job.
+MAX_BUCKETS = 4096
+
 # --------------------------------------------------------------------------
 # Matching rules (reference: entity_config.yaml:495-615)
 #
 # Each rule yields a normalized match key.  ``kind`` is either
 #   "exact"  — scalar attribute equality (lower+trim), or
 #   "search" — value membership in an array attribute (explode + equi-join).
-# Rules are tried in ``priority`` order; first hit wins (window rank in
-# operators.linking, replacing the reference's sequential rule cascade
-# systematic_merge_provider.py:321-393).
+# Every key hit becomes a match edge and connected components decide
+# (operators.linking), so an incremental batch links exactly as a one-shot
+# run would.  ``priority`` orders the reference's sequential rule cascade
+# (systematic_merge_provider.py:321-393) and is kept for provenance only.
 # --------------------------------------------------------------------------
 
 MATCHING_RULES: dict[str, list[dict]] = {

@@ -30,6 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Below this many nodes the xxhash64 id compression cannot repay its
+# mapping joins (see ``connected_components``).
+MIN_COMPRESS_NODES = 1_000_000
+
 
 def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     row = edges.agg(
@@ -84,7 +88,7 @@ def connected_components(
     max_iter: int = 50,
     checkpointer=None,
     compress_ids: bool = True,
-    min_compress_nodes: int = 1_000_000,
+    min_compress_nodes: int = MIN_COMPRESS_NODES,
 ) -> DataFrame:
     """edges(src, dst) → assignments(node, component).
 
@@ -219,6 +223,7 @@ def assign_components(
     node_col: str = "node",
     max_component_size: int | None = None,
     nodes_distinct: bool = False,
+    compress_ids: bool = True,
 ) -> DataFrame:
     """All nodes → component labels; isolated nodes become singletons.
 
@@ -235,8 +240,11 @@ def assign_components(
     full-stream distinct shuffle is skipped — at web scale the mention
     stream is 5-10× the node set, and this distinct is one of the three
     passes the pipeline fuses into a single materialized scan.
+
+    ``compress_ids``: passed to ``connected_components``; False skips its
+    compression probe when the caller already knows the graph is too small.
     """
-    asg = connected_components(edges)
+    asg = connected_components(edges, compress_ids=compress_ids)
     nd = nodes.select(F.col(node_col).alias("node"))
     if not nodes_distinct:
         nd = nd.distinct()

@@ -12,8 +12,11 @@ Re-expresses the reference's two matching stages Spark-first:
 
   * the DB match-rule cascade (systematic_merge_provider.py:321-393 —
     sequential per-group HTTP lookups, first-hit-wins by priority) becomes
-    one **broadcast join against an exploded alias dictionary** plus a
-    priority window (row_number = 1) — SURVEY.md §2.4 J4/J6.
+    one **broadcast join against an exploded alias dictionary** —
+    SURVEY.md §2.4 J4/J6.  Every dictionary hit is an edge and connected
+    components decide, as in a one-shot run: first-hit-wins would drop
+    the edge to a second existing entity that one-shot CC links through
+    a shared key, and incremental runs would then diverge from one-shot.
 
 Normalization = lower + trim, the reference's ``_normalize_string``
 (systematic_merge_provider.py:60-62).
@@ -21,7 +24,7 @@ Normalization = lower + trim, the reference's ``_normalize_string``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from knowledgegraph_spark.config import MATCHING_RULES
@@ -148,68 +151,63 @@ def build_alias_dict(entity_nodes: DataFrame) -> DataFrame:
     found by — exact scalar rules and array-membership ("search") rules
     alike (array fields explode; systematic_merge_provider.py:344-366's
     ``ANY(x IN e.emails ...)`` becomes explode + equi-join).
-    Output: (match_key, canonical_name, priority, confidence).
+    Output: (match_key, canonical_name, entity_type, priority, confidence).
+
+    Single-scan plan, as in ``mention_match_keys``: every rule becomes one
+    optional struct carrying its values as an array (a scalar field is a
+    one-element array) → explode the rules → explode the values.  The
+    former per-rule union re-read ``entity_nodes`` once per rule (~18
+    filtered scans).
     """
-    branches = []
+    rule_structs = []
     for etype, rules in MATCHING_RULES.items():
-        e = entity_nodes.filter(F.col("type") == etype)
         for rule in rules:
             f = rule["field"]
             if f not in entity_nodes.columns:
                 continue
-            if rule["kind"] == "search":
-                vals = e.select(
-                    "name", "type", F.explode(F.col(f)).alias("value")
-                )
-            else:
-                vals = e.select("name", "type", F.col(f).alias("value"))
-            branches.append(
-                vals.filter(F.col("value").isNotNull())
-                .select(
-                    F.concat_ws(
-                        "|", F.col("type"), F.lit(_key_space(f)), _norm(F.col("value"))
-                    ).alias("match_key"),
-                    F.col("name").alias("canonical_name"),
-                    F.col("type").alias("entity_type"),
-                    F.lit(rule["priority"]).alias("priority"),
-                    F.lit(float(rule["confidence"])).alias("confidence"),
+            vals = F.col(f) if rule["kind"] == "search" else F.array(F.col(f))
+            rule_structs.append(
+                F.when(
+                    F.col("type") == etype,
+                    F.struct(
+                        F.lit(_key_space(f)).alias("space"),
+                        vals.cast("array<string>").alias("vals"),
+                        F.lit(rule["priority"]).alias("priority"),
+                        F.lit(float(rule["confidence"])).alias("confidence"),
+                    ),
                 )
             )
-    # name itself is always a key even when not listed (identity rule)
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.distinct()
+    return (
+        entity_nodes.select("name", "type", F.explode(F.array(*rule_structs)).alias("r"))
+        .filter(F.col("r").isNotNull())
+        .select("name", "type", "r.space", "r.priority", "r.confidence",
+                F.explode("r.vals").alias("value"))
+        .filter(F.col("value").isNotNull())
+        .select(
+            F.concat_ws("|", F.col("type"), F.col("space"), _norm(F.col("value"))).alias("match_key"),
+            F.col("name").alias("canonical_name"),
+            F.col("type").alias("entity_type"),
+            "priority",
+            "confidence",
+        )
+        .distinct()
+    )
 
 
 def dict_match_edges(keys: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """Link mention nodes to existing canonical entities via the dictionary.
 
-    Broadcast join (the dictionary is the small side by design); per node
-    the lowest-priority rule hit wins (window row_number — the Spark form
-    of the reference's first-hit-wins cascade).  Emits (src=node,
-    dst=existing-node-key) edges feeding the same CC pass, so new mentions
-    and existing entities canonicalize together.
+    Broadcast join (the dictionary is the small side by design).  Every
+    hit becomes an edge (src=node, dst=existing-node-key) feeding the same
+    CC pass, so new mentions and existing entities canonicalize together
+    and CC decides, as in a one-shot run: a mention whose email names one
+    existing entity and whose surface is another's alias joins both.
     """
     hits = keys.select("node", "match_key").join(
-        F.broadcast(
-            alias_dict.select(
-                "match_key",
-                "canonical_name",
-                "entity_type",
-                F.col("priority").alias("rule_priority"),
-            )
-        ),
+        F.broadcast(alias_dict.select("match_key", "canonical_name", "entity_type")),
         "match_key",
     )
-    w = Window.partitionBy("node").orderBy(
-        F.col("rule_priority"), F.col("canonical_name")
-    )
-    best = (
-        hits.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    return best.select(
+    return hits.select(
         F.col("node").alias("src"),
         node_key(F.col("entity_type"), F.col("canonical_name")).alias("dst"),
     ).distinct()

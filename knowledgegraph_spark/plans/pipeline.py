@@ -23,7 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from knowledgegraph_spark.operators.components import assign_components
+from knowledgegraph_spark.config import MAX_BUCKETS
+from knowledgegraph_spark.operators.components import MIN_COMPRESS_NODES, assign_components
 from knowledgegraph_spark.operators.extraction import (
     MAX_TEXT_BYTES,
     errors_of,
@@ -326,6 +327,8 @@ def run_pipeline(
     lands in ``failed_pages`` with its error and is ledgered
     status='failed' — skipped on resume until ``admin.reset_failed``.
     """
+    if not 1 <= n_buckets <= MAX_BUCKETS:
+        raise ValueError(f"n_buckets={n_buckets} is outside [1, MAX_BUCKETS={MAX_BUCKETS}]")
     cat = Catalog(spark, warehouse)
 
     # Ledger bucket layout (url-hash): persisted table property, like the
@@ -466,19 +469,25 @@ def run_pipeline(
         .localCheckpoint(eager=True)
     )
 
+    # One collect over the materialized surface answers two questions: the
+    # exact head-key size for the salt decision (the former dedicated
+    # sample+aggregate probe pass is gone; build_kg has the same structure,
+    # thresholds unchanged), and whether CC may compress node ids.  Every
+    # CC node is a surface node, so a surface below MIN_COMPRESS_NODES
+    # means connected_components' own probe would decline compression —
+    # skipping it saves its mapping persist and countDistinct job.
+    surface_stats = surface.agg(
+        F.max("n_mentions").alias("mx"), F.count("*").alias("n")
+    ).collect()[0]
     if n_salts == "auto":
-        # exact head-key size from the materialized surface counts — the
-        # former dedicated sample+aggregate probe pass is gone (build_kg
-        # has the same structure; thresholds unchanged)
         from knowledgegraph_spark.operators.skew import n_salts_for_max_rows
 
-        mx = surface.agg(F.max("n_mentions").alias("mx")).collect()[0]["mx"]
         kw = (
             {"min_rows_to_salt": 500_000, "target_rows_per_task": 250_000}
             if provenance_cap is not None
             else {}
         )
-        n_salts = n_salts_for_max_rows(int(mx or 0), **kw)
+        n_salts = n_salts_for_max_rows(int(surface_stats["mx"] or 0), **kw)
 
     keys = mention_match_keys(mentions)
     edges = match_edges(keys)
@@ -487,6 +496,7 @@ def run_pipeline(
     assignments = assign_components(
         surface.select("node"), edges,
         max_component_size=max_component_size, nodes_distinct=True,
+        compress_ids=int(surface_stats["n"]) >= MIN_COMPRESS_NODES,
     )
     cat.write(assignments, "stage_assignments")
     assignments = cat.read("stage_assignments")

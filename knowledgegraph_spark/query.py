@@ -63,13 +63,17 @@ def one_hop(triples: DataFrame, name: str, limit: int = 20) -> DataFrame:
     return out.unionByName(inc).orderBy("direction", "pred", "neighbor").limit(limit)
 
 
-def two_hop(triples: DataFrame, name: str, limit: int = 100) -> DataFrame:
+def two_hop(triples: DataFrame, name: str, limit: int | None = 100) -> DataFrame:
     """Two-hop paths from an entity (either direction per hop).
 
     Undirected expansion as two self-joins over the triple table — the
     natural extension of the reference's 1-hop CLI.  Returns
     (mid, pred1, neighbor, pred2) rows, deduplicated, excluding paths
-    returning to the origin.
+    returning to the origin, sorted.
+
+    ``limit=None`` returns every path.  Spark plans sort + limit as a
+    TakeOrderedAndProject whose top-k buffer is sized by the limit, so a
+    huge limit standing in for "all" can exhaust the driver heap.
     """
     und = triples.select(
         F.col("subj").alias("a"), F.col("pred"), F.col("obj").alias("b")
@@ -84,14 +88,14 @@ def two_hop(triples: DataFrame, name: str, limit: int = 100) -> DataFrame:
     hop2 = und.select(
         F.col("a").alias("mid"), F.col("pred").alias("pred2"), F.col("b").alias("neighbor")
     )
-    return (
+    out = (
         hop1.join(hop2, "mid")
         .filter(F.col("neighbor") != name)
         .select("mid", "pred1", "pred2", "neighbor")
         .distinct()
         .orderBy("mid", "pred1", "pred2", "neighbor")
-        .limit(limit)
     )
+    return out if limit is None else out.limit(limit)
 
 
 def neighborhood_subgraph(triples: DataFrame, name: str) -> DataFrame:

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from knowledgegraph_spark.config import MAX_BUCKETS
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("KG_SHUFFLE_PARTITIONS", "32"))
 
 
@@ -55,6 +57,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Spark lists a table's partition directories with a Spark job once
+        # there are more than this many (default 32): a 64-bucket catalog
+        # table then cost a 64-task listing job (170-340 ms on a 4-core
+        # host) on every read, and every KG query paid it.  No catalog
+        # table holds more than MAX_BUCKETS directories, so the driver
+        # lists them all serially (milliseconds on a local warehouse) and
+        # a read starts no job.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(MAX_BUCKETS))
         # 32g: per-stage profiling (BENCH/BASELINE.md, 2M pages) showed the
         # 16g default GC-bound — raising it cut stage walls 35-41% at BOTH
         # parallelism levels and lifted 2→8-core scaling efficiency from

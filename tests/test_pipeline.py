@@ -295,3 +295,46 @@ def test_incremental_equals_oneshot(spark, tmp_path):
         (r.type, r.name) for r in cat_one.read("entity_nodes").collect()
     )
     assert n_inc == n_one
+
+
+def test_incremental_ambiguous_alias_equals_oneshot(spark, tmp_path):
+    """A later mention whose email names one existing entity and whose
+    surface is ANOTHER existing entity's alias.  One-shot CC links all
+    three nodes (shared keys); the incremental dictionary match must emit
+    both hits so CC links them too — keeping only the best-priority hit
+    (the email) left the two entities split."""
+    import datetime as dt
+
+    def page(i, minute, text):
+        ts = dt.datetime(2024, 1, 1, 1, minute)
+        return Row(url=f"https://alias.example/{i}", warc_ts=ts, html=None, text=text, lang="en")
+
+    batch1 = [
+        page(1, 0, "Carla Be (carla@x.example) works at Acme."),
+        page(2, 1, "C. Be (carla@x.example) works at Acme."),  # "C. Be" becomes Carla's alias
+        page(3, 2, "Cedric Be (cedric@x.example) works at Acme."),
+    ]
+    batch2 = [page(4, 30, "C. Be (cedric@x.example) works at Acme.")]
+    first = spark.createDataFrame(batch1, schema=PAGES_SCHEMA)
+    every = spark.createDataFrame(batch1 + batch2, schema=PAGES_SCHEMA)
+
+    wh_inc = str(tmp_path / "inc")
+    cat_inc = run_pipeline(spark, first, wh_inc, session_id="a")
+    people = {(r.name, tuple(r.aliases)) for r in cat_inc.read("entity_nodes").filter("type = 'Person'").collect()}
+    assert people == {("Carla Be", ("C. Be",)), ("Cedric Be", ())}
+    cat_inc = run_pipeline(spark, every, wh_inc, session_id="b")
+    cat_one = run_pipeline(spark, every, str(tmp_path / "one"), session_id="x")
+
+    def graph(cat):
+        ents = sorted(
+            (r.type, r.name, tuple(r.aliases), tuple(r.emails))
+            for r in cat.read("entity_nodes").collect()
+        )
+        tris = {(r.subj, r.pred, r.obj) for r in cat.read("triples").collect()}
+        return ents, tris
+
+    one = graph(cat_one)
+    assert [e for e in one[0] if e[0] == "Person"] == [
+        ("Person", "Carla Be", ("C. Be", "Cedric Be"), ("carla@x.example", "cedric@x.example"))
+    ]
+    assert graph(cat_inc) == one

@@ -7,6 +7,7 @@ sort-merge should fail CI, not a cluster bill.
 
 import pytest
 from pyspark.sql import functions as F
+from test_entry import SF_DIR
 
 
 def _plan(df) -> str:
@@ -78,9 +79,24 @@ def test_entry_knn_topk_has_no_global_sort(spark):
     is k rows — never the full scan."""
     import __spark_entry__ as entry_mod
 
-    df = entry_mod.queries()["knn_topk"](spark, "/root/testdata/sf0.001")
+    df = entry_mod.queries()["knn_topk"](spark, SF_DIR)
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
+
+
+def test_entry_plans_have_bounded_topk(spark):
+    """TakeOrderedAndProject buffers ``limit`` rows per task and again on
+    the driver, so a limit standing in for "all rows" (q_two_hop once
+    passed 10**9) exhausts the heap.  No entry plan may carry a top-k
+    limit above 10^6; a query that wants every row sorts without a limit."""
+    import re
+
+    import __spark_entry__ as entry_mod
+
+    for name, q in sorted(entry_mod.queries().items()):
+        plan = _plan(q(spark, SF_DIR))
+        limits = [int(n) for n in re.findall(r"TakeOrderedAndProject\(limit=(\d+)", plan)]
+        assert all(n <= 10**6 for n in limits), (name, limits)
 
 
 def test_batch_topk_is_two_phase(spark):
